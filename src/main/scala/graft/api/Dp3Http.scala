@@ -150,13 +150,27 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
     strField(body, "database").map(n => dbFor(n).svc).getOrElse(svc)
 
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+
+  /** Request threads, named `dp3-http-<port>-<n>`; [[stop]] shuts them
+    * down, so a JVM that served HTTP can exit. */
+  private val executor = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"dp3-http-$boundPort-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(executor)
 
   /** Bound port (after construction; useful with port = 0). */
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Dp3Http = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+    executor.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+    ()
+  }
 
   // --- request parsing ---------------------------------------------------
 

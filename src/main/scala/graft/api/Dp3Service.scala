@@ -76,9 +76,11 @@ final class Dp3Service(underlying: MessageCatalog,
   /** version masks apply to any frame carrying ingest_version —
     * data rows and stat partials alike (whole-batch masking is what
     * makes truncated stats exact with no re-aggregation) */
-  private def maskVersions(df: DataFrame): DataFrame =
+  private def maskVersions(df: DataFrame,
+      masks: collection.Map[(String, String), Long] = truncatedVersion)
+      : DataFrame =
     if (!df.columns.contains("ingest_version")) df
-    else truncatedVersion.foldLeft(df) { case (acc, ((p, t), v)) =>
+    else masks.foldLeft(df) { case (acc, ((p, t), v)) =>
       acc.where(!(col("producer") === p && col("topic") === t
         && col("ingest_version") <= v))
     }
@@ -153,21 +155,28 @@ final class Dp3Service(underlying: MessageCatalog,
       // (the reference keeps chunks with missing stats; so must we).
       // The check compares (producer, topic, ingest_version) triples
       // of the control table against the stats table — two
-      // kilobyte-scale reads, once per statement (the Planner samples
-      // the witness once per instance). Unprovable (no version column,
-      // unreadable table) => false => pruning off, results exact.
+      // kilobyte-scale reads. It is a pure function of those tables'
+      // files and the truncation masks, so it is memoized on exactly
+      // those (ControlCache.cachedOver): it runs again after any
+      // append, rewrite or truncate, and never otherwise. Unprovable
+      // (no version column, unreadable table) => false => pruning off,
+      // results exact.
       coverage = s => {
-        val ctl = maskVersions(st.control(s))
-        val parts = maskVersions(partialsOf(s))
-        val key = Seq("producer", "topic", "ingest_version")
-        key.forall(ctl.columns.contains) &&
-          key.forall(parts.columns.contains) && {
-            import org.apache.spark.sql.functions.broadcast
-            ctl.select(key.map(col): _*)
-              .join(broadcast(parts.select(key.map(col): _*).distinct()),
-                key, "left_anti")
-              .isEmpty
-          }
+        val masks = truncatedVersion.readOnlySnapshot()
+        val ctl = maskVersions(st.control(s), masks)
+        val parts = maskVersions(partialsOf(s), masks)
+        graft.util.ControlCache.cachedOver("coverage", Seq(ctl, parts),
+            masks.toSeq.sorted.mkString(",")) {
+          val key = Seq("producer", "topic", "ingest_version")
+          key.forall(ctl.columns.contains) &&
+            key.forall(parts.columns.contains) && {
+              import org.apache.spark.sql.functions.broadcast
+              ctl.select(key.map(col): _*)
+                .join(broadcast(parts.select(key.map(col): _*).distinct()),
+                  key, "left_anti")
+                .isEmpty
+            }
+        }
       })
   }
 

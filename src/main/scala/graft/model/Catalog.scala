@@ -264,7 +264,13 @@ final class TopicMapCatalog(topics: Map[String, DataFrame])
   * day-partitioned data plus the append-only stats and control tables.
   * Producer discovery reads the kilobyte-scale control table — the
   * reference's rootmap lookup (server/rootmap/sqlrootmap.go:427-461) —
-  * so `from *` planning touches no event data at any scale. */
+  * so `from *` planning touches no event data at any scale.
+  *
+  * The stats, field-stats and control tables are flat and append-only,
+  * so their schemas are fingerprint-cached ([[graft.util.ControlCache]]):
+  * a read with the schema given skips the footer job a schema-less
+  * `spark.read.parquet` runs, and still lists (and later scans) the
+  * directory's current files. */
 final class IngestedCatalog(dataDir: String, statsDir: String,
     controlDir: String, fieldStatsDir: Option[String] = None)
     extends MessageCatalog with Serializable {
@@ -272,16 +278,25 @@ final class IngestedCatalog(dataDir: String, statsDir: String,
   def messages(spark: SparkSession): DataFrame =
     spark.read.parquet(dataDir)
 
-  def stats(spark: SparkSession): DataFrame =
-    spark.read.parquet(statsDir)
+  def stats(spark: SparkSession): DataFrame = flat(spark, statsDir)
 
   /** Per-field stat partials (`Ingest.startWithStats` with
     * `fieldStats`) — the statfilter's pruning source. */
   def fieldStats: Option[SparkSession => DataFrame] =
-    fieldStatsDir.map(d => (s: SparkSession) => s.read.parquet(d))
+    fieldStatsDir.map(d => (s: SparkSession) => flat(s, d))
 
-  def control(spark: SparkSession): DataFrame =
-    spark.read.parquet(controlDir)
+  def control(spark: SparkSession): DataFrame = flat(spark, controlDir)
+
+  /** A flat table read with the schema Spark infers from the same file
+    * set, cached on the directory's fingerprint. */
+  private def flat(spark: SparkSession, dir: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val schema = graft.util.ControlCache.cached(fs, p, "schema") {
+      spark.read.parquet(dir).schema
+    }
+    spark.read.schema(schema).parquet(dir)
+  }
 
   override def scanTopic(spark: SparkSession, topic: String): DataFrame =
     messages(spark).where(col("topic") === topic)

@@ -625,7 +625,7 @@ object Search {
     val sfs = statsDir.getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val (nTot, sumdlTot) =
-      graft.util.ControlCache.cached(sfs, statsDir) {
+      graft.util.ControlCache.cached(sfs, statsDir, "bm25.stats") {
         val r = spark.read.parquet(statsDir.toString).distinct()
           .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl"))
           .head()
@@ -732,7 +732,7 @@ object Search {
     import org.apache.hadoop.fs.Path
     val meta = new Path(new Path(dir), "meta")
     val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.ControlCache.cached(fs, meta) {
+    graft.util.ControlCache.cached(fs, meta, "bm25.meta") {
       spark.read.parquet(meta.toString).head().getInt(0)
     }
   }

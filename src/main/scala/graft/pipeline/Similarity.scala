@@ -348,7 +348,7 @@ object Similarity {
     // frozen between maintenance rewrites, so steady-state serves
     // skip the per-call collect job; a retrain/rewrite lands fresh
     // UUID part files, which misses the fingerprint and reloads
-    graft.util.ControlCache.cached(fs, cdir) {
+    graft.util.ControlCache.cached(fs, cdir, "ivf.centroids") {
       spark.read.parquet(cdir.toString)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
         .groupBy(_._1).toSeq.sortBy(_._1)

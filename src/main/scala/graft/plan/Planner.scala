@@ -30,23 +30,14 @@ import graft.ql._
 final class Planner(catalog: MessageCatalog,
     stats: Option[Planner.StatSource] = None) extends Serializable {
 
-  /** The stat source's coverage witness, sampled once per Planner (the
-    * service builds a fresh Planner per statement, so this is once per
-    * query; a long-lived Planner samples at its first pruned scan —
-    * sound for append-only stores, where proven coverage only grows as
-    * long as every later version writes its partials too). Pruning
-    * with an unproven tier silently drops rows (see
-    * [[Planner.StatSource]]'s coverage contract), so an exception from
-    * the witness reads as "cannot prove" — pruning stays off. */
-  @transient private var statCoverage: Option[Boolean] = None
+  /** The stat source's coverage witness, asked at every pruned scan
+    * (the source memoizes it if it can). Pruning with an unproven tier
+    * silently drops rows (see [[Planner.StatSource]]'s coverage
+    * contract), so an exception from the witness reads as "cannot
+    * prove" — pruning stays off. */
   private def coverageOk(spark: SparkSession,
-      src: Planner.StatSource): Boolean = synchronized {
-    statCoverage.getOrElse {
-      val ok = try src.coverage(spark) catch { case _: Exception => false }
-      statCoverage = Some(ok)
-      ok
-    }
-  }
+      src: Planner.StatSource): Boolean =
+    try src.coverage(spark) catch { case _: Exception => false }
 
   def plan(spark: SparkSession, input: String): DataFrame =
     Parser.parse(input) match {
@@ -93,13 +84,23 @@ final class Planner(catalog: MessageCatalog,
     // producer-major tie order is recovered arithmetically from the
     // producer's index in the from-list. Identical output order, O(1)
     // plan size in the number of producers.
-    val idxDf = spark.createDataFrame(
-      producers.zipWithIndex.map { case (p, i) => (p, i.toLong) })
-      .toDF("producer", "_pidx")
-    val merged = buildSelect(spark, q, producers, q.select)
-      .join(broadcast(idxDf), Seq("producer"))
-      .withColumn("_mj", col("_pidx") * lit(1000000L) + col("_mj"))
-      .drop("_pidx")
+    // One producer: its index is the constant 0, so the join is the
+    // identity (bar moving `producer` to the front, which the
+    // projection keeps) and would only cost a broadcast job.
+    val selected = buildSelect(spark, q, producers, q.select)
+    val merged =
+      if (producers.size == 1)
+        selected.select(col("producer") +: selected.columns
+          .filter(_ != "producer")
+          .map(c => col("`" + c.replace("`", "``") + "`")): _*)
+      else {
+        val idxDf = spark.createDataFrame(
+          producers.zipWithIndex.map { case (p, i) => (p, i.toLong) })
+          .toDF("producer", "_pidx")
+        selected.join(broadcast(idxDf), Seq("producer"))
+          .withColumn("_mj", col("_pidx") * lit(1000000L) + col("_mj"))
+          .drop("_pidx")
+      }
 
     // seq as the final key makes the order total even when two
     // messages of one topic share a ns timestamp (limit/offset and
@@ -222,9 +223,10 @@ final class Planner(catalog: MessageCatalog,
     // raw source column — the difference between a parquet row-group
     // prune and a full-file decode (see MessageCatalog.scanTopic)
     var df = catalog.scanTopic(spark, e.topic, q.between)
-    df =
-      if (producers.size == 1) df.where(col("producer") === producers.head)
-      else df.where(col("producer").isin(producers: _*))
+    val ofProducers =
+      if (producers.size == 1) col("producer") === producers.head
+      else col("producer").isin(producers: _*)
+    df = df.where(ofProducers)
     val alias = e.alias.getOrElse(e.topic)
     whereFor(q, alias).foreach { pred =>
       df = df.where(compile(df, pred))
@@ -244,11 +246,14 @@ final class Planner(catalog: MessageCatalog,
       // silently dropping rows — the reference keeps chunks with
       // missing stats (ErrNoStatsFound => keep), and so do we, by
       // turning pruning off entirely when coverage can't be proven.
+      // The ranges come from this scan's own tables only: other
+      // topics' and producers' buckets would widen them.
       stats.foreach { src =>
         val tier = src.tier(spark)
         if (graft.stats.StatFilter.prunable(tier.columns.toSet, pred)
             && coverageOk(spark, src))
-          df = graft.stats.StatFilter.pruneScan(df, tier, pred,
+          df = graft.stats.StatFilter.pruneScan(df,
+            tier.where(col("topic") === e.topic && ofProducers), pred,
             src.widthNs)
       }
     }
@@ -409,13 +414,16 @@ object Planner {
     * unaccounted for, silently dropping rows. The reference never does
     * this: missing statistics keep the chunk (ErrNoStatsFound => keep,
     * server/executor/statfilter.go). `coverage` is the witness the
-    * planner consults before pruning — return true only when every
-    * unmasked data version has stat partials in this tier (Dp3Service
-    * verifies this against its control table; see its statSource). The
-    * default asserts coverage, which is correct for tiers derived from
-    * the very frame being scanned, but a PARTIAL tier supplied here
-    * with the default witness corrupts results — callers who cannot
-    * prove coverage must pass `_ => false` (pruning off). */
+    * planner consults before every pruned scan — return true only when
+    * every unmasked data version has stat partials in this tier
+    * (Dp3Service verifies this against its control table, memoized on
+    * the two tables' files and its truncation masks; see its
+    * statSource). The planner keeps no memo of its own, and an
+    * exception reads as "cannot prove". The default asserts coverage,
+    * which is correct for tiers derived from the very frame being
+    * scanned, but a PARTIAL tier supplied here with the default witness
+    * corrupts results — callers who cannot prove coverage must pass
+    * `_ => false` (pruning off). */
   final case class StatSource(tier: org.apache.spark.sql.SparkSession
       => org.apache.spark.sql.DataFrame, widthNs: Long,
       coverage: org.apache.spark.sql.SparkSession => Boolean = _ => true)

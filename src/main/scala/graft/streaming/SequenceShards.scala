@@ -529,7 +529,7 @@ object SequenceShards {
   private def storedMetaVals(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       meta: org.apache.hadoop.fs.Path): Seq[Any] =
-    graft.util.ControlCache.cached(fs, meta) {
+    graft.util.ControlCache.cached(fs, meta, "shards.meta") {
       spark.read.parquet(meta.toString).head().toSeq
     }
 

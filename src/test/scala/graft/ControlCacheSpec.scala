@@ -26,7 +26,7 @@ class ControlCacheSpec extends AnyFunSuite {
     Seq((7, "a")).toDF("n", "s").coalesce(1)
       .write.mode("overwrite").parquet(dir)
     var loads = 0
-    def read(): Int = ControlCache.cached(fs, p) {
+    def read(): Int = ControlCache.cached(fs, p, "n") {
       loads += 1
       spark.read.parquet(dir).head().getInt(0)
     }
@@ -43,6 +43,32 @@ class ControlCacheSpec extends AnyFunSuite {
     Seq((11, "c")).toDF("n", "s").coalesce(1)
       .write.mode("overwrite").parquet(dir)
     assert(read() == 11 && loads == 3)
+  }
+
+  test("entries are keyed on the qualified URI and the kind") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("ctlcache-keys").toString + "/t"
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val local = fsOf(p)
+    Seq(1).toDF("n").write.parquet(dir)
+    // the same path through a second filesystem URI: another table
+    val alt = new ControlCacheSpec.AltLocalFs
+    alt.initialize(java.net.URI.create("alt:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(alt.exists(p)) // same files, different URI
+    var loads = 0
+    def read(fs: org.apache.hadoop.fs.FileSystem, v: String): String =
+      ControlCache.cached(fs, p, "fs") { loads += 1; v }
+    assert(read(local, "local") == "local" && loads == 1)
+    assert(read(alt, "alt") == "alt" && loads == 2)
+    assert(read(local, "x") == "local" && read(alt, "x") == "alt")
+    assert(loads == 2)
+    // two kinds on one directory are two entries, each of its own type
+    val n = ControlCache.cached(local, p, "kind-a")(7)
+    val s = ControlCache.cached(local, p, "kind-b")("seven")
+    assert(n == 7 && s == "seven")
+    assert(ControlCache.cached(local, p, "kind-a")(0) == 7)
+    assert(ControlCache.cached(local, p, "kind-b")("") == "seven")
   }
 
   test("the bm25 serve reflects an in-JVM index rewrite (cache can " +
@@ -76,5 +102,13 @@ class ControlCacheSpec extends AnyFunSuite {
       s"$base/ivf", kCells = 1, iters = 1)
     val c2 = Similarity.readIvfCentroids(spark, s"$base/ivf")
     assert(c1 != c2, "stale centroids served after a rewrite")
+  }
+}
+
+object ControlCacheSpec {
+  /** The local filesystem under the `alt:` scheme. */
+  final class AltLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("alt:///")
+    override def getScheme: String = "alt"
   }
 }

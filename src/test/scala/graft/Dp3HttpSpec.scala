@@ -34,6 +34,21 @@ class Dp3HttpSpec extends AnyFunSuite {
       .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
 
+  test("stop() ends the request threads") {
+    val h = new Dp3Http(svc, spark).start()
+    val prefix = s"dp3-http-${h.boundPort}-"
+    def alive = Thread.getAllStackTraces.keySet.toArray(Array[Thread]())
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    try {
+      val r = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${h.boundPort}/")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200 && alive.nonEmpty)
+    } finally h.stop()
+    alive.foreach(_.join(5000))
+    assert(alive.isEmpty, alive.map(_.getName).mkString(", "))
+  }
+
   test("GET / identifies the service") {
     val r = get("/")
     assert(r.statusCode() == 200 && r.body() == "dp3")

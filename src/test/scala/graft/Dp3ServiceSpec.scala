@@ -198,8 +198,8 @@ class Dp3ServiceSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1))).toSeq)
     assert(got == Seq(("view", 15L * 1000000000L),
       ("click", 70L * 1000000000L), ("view", 75L * 1000000000L)))
-    assert(stored.query(spark, ql).queryExecution.executedPlan
-      .toString.contains("LeftSemi"))
+    PruneMarks.assertPrunedTo(stored.query(spark, ql),
+      60L * 1000000000L, 120L * 1000000000L)
   }
 
   test("store-backed statfilter prunes QL scans to qualifying buckets") {
@@ -240,15 +240,14 @@ class Dp3ServiceSpec extends AnyFunSuite {
     assert(pruned.select("time", "seq").collect().toSeq
       == bare.query(spark, ql).select("time", "seq").collect().toSeq)
     assert(pruned.count() == 1)
-    // and the plan really carries the bucket skip: the broadcast
-    // semi-join against qualifying stat rows
-    assert(pruned.queryExecution.executedPlan.toString
-      .contains("LeftSemi"))
+    // and the plan really carries the bucket skip: the qualifying
+    // bucket's time range pushed into the parquet scan
+    PruneMarks.assertPrunedTo(pruned, 60L * 1000000000L,
+      120L * 1000000000L)
     // a query no stored stats can check is planned without the skip
     val untouched = stored.query(spark,
       "from p0 click where click.value != 3;")
-    assert(!untouched.queryExecution.executedPlan.toString
-      .contains("LeftSemi"))
+    PruneMarks.assertUnpruned(untouched)
     assert(untouched.count() == 3)
   }
 
@@ -285,10 +284,10 @@ class Dp3ServiceSpec extends AnyFunSuite {
       Some(graft.api.IngestStore(cat)))
 
     // the only matching row (value 4.0) lives in the uncovered version:
-    // it must surface, and the plan must NOT carry the bucket semi-join
+    // it must surface, and the plan must NOT carry the bucket skip
     val got = stored.query(spark, "from p0 click where click.value > 3;")
     assert(got.count() == 1)
-    assert(!got.queryExecution.executedPlan.toString.contains("LeftSemi"))
+    PruneMarks.assertUnpruned(got)
 
     // truncating the uncovered version restores coverage (masks apply
     // to control and stats alike) — pruning re-engages on a fresh
@@ -298,6 +297,57 @@ class Dp3ServiceSpec extends AnyFunSuite {
     after.truncate(spark, "truncate p0 click now;")
     assert(after.query(spark, "from p0 click where click.value > 3;")
       .count() == 0)
+  }
+
+  test("one long-lived service re-proves coverage after every append " +
+      "and truncate") {
+    import spark.implicits._
+    import graft.stats.StatTiers
+    val base = java.nio.file.Files.createTempDirectory("graft-statl")
+      .toString
+    val S = 1000000000L
+    val v1 = Seq(("p0", "click", 10L * S, 1L, 1.0),
+      ("p0", "click", 70L * S, 2L, 4.0))
+      .toDF("producer", "topic", "time", "seq", "value")
+    v1.withColumn("ingest_version", lit(1L)).write.parquet(s"$base/data")
+    StatTiers.base(v1, StatTiers.BaseWidthNs)
+      .withColumn("ingest_version", lit(1L))
+      .write.parquet(s"$base/stats")
+    Seq(("p0", "click", 1L, 1000L))
+      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
+      .write.parquet(s"$base/control")
+    val cat = new graft.model.IngestedCatalog(
+      s"$base/data", s"$base/stats", s"$base/control")
+    val svc = new Dp3Service(cat, s => cat.messages(s),
+      Some(graft.api.IngestStore(cat)))
+    def seqs(df: org.apache.spark.sql.DataFrame) =
+      df.select("seq").collect().map(_.getLong(0)).toSeq
+
+    // every version is covered: the value > 3 scan prunes to bucket 1
+    val q0 = svc.query(spark, "from p0 click where click.value > 3;")
+    PruneMarks.assertPrunedTo(q0, 60L * S, 120L * S)
+    assert(seqs(q0) == Seq(2L))
+
+    // version 2 lands with a control row but no partials: the memo must
+    // miss, and its row must come back from an unpruned scan
+    Seq(("p1", "click", 20L * S, 3L, 5.0))
+      .toDF("producer", "topic", "time", "seq", "value")
+      .withColumn("ingest_version", lit(2L))
+      .write.mode("append").parquet(s"$base/data")
+    Seq(("p1", "click", 2L, 2000L))
+      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
+      .write.mode("append").parquet(s"$base/control")
+    val q1 = svc.query(spark, "from p1 click where click.value > 3;")
+    PruneMarks.assertUnpruned(q1)
+    assert(seqs(q1) == Seq(3L))
+
+    // truncating the uncovered version restores coverage on the same
+    // instance: pruning engages again, and stays exact
+    svc.truncate(spark, "truncate p1 click now;")
+    assert(seqs(svc.query(spark, "from p1 click;")).isEmpty)
+    val q2 = svc.query(spark, "from p0 click where click.value > 3;")
+    PruneMarks.assertPrunedTo(q2, 60L * S, 120L * S)
+    assert(seqs(q2) == Seq(2L))
   }
 
   test("statrange plan is all-codegen and the store path matches the " +

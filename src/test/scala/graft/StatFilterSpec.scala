@@ -214,7 +214,7 @@ class StatFilterSpec extends AnyFunSuite {
       val withVal = msgs.where(col("props") === "{\"k\": 42}")
         .select(col("producer"), col("topic"),
           expr(s"time div ${W}L").as("bucket")).distinct()
-      val surviving = StatFilter.qualifyingBuckets(tier, where)
+      val surviving = tier.where(StatFilter.compile(tier, where))
       assert(withVal.join(surviving,
         Seq("producer", "topic", "bucket"), "left_anti").count() == 0)
       // the pruned scan retains every matching row and drops most others
@@ -242,7 +242,8 @@ class StatFilterSpec extends AnyFunSuite {
       .filter(_.contains("PushedFilters")).mkString
     assert(pushed.contains("GreaterThanOrEqual(time")
       || pushed.contains("Or(And(GreaterThanOrEqual(time"), plan)
-    assert(plan.contains("LeftSemi"), plan)
+    val (lo, hi) = StatFilter.qualifyingRanges(tier, where, W).head
+    PruneMarks.assertPrunedTo(pruned, lo, hi)
   }
 
   test("scattered matches skip pruning entirely (selectivity gate)") {
@@ -287,7 +288,7 @@ class StatFilterSpec extends AnyFunSuite {
       }.toDF("producer", "topic", "time", "seq", "value", "props")
       val tier = StatTiers.baseFields(df, W, Seq("value"), Seq("props"))
       val pred = Cmp("/t", "props", op, StrLit(probe))
-      val surviving = StatFilter.qualifyingBuckets(tier, pred)
+      val surviving = tier.where(StatFilter.compile(tier, pred))
         .select("bucket").collect().map(_.getLong(0)).toSet
       val matching = rows.filter { case (_, w, _) =>
         op match {
